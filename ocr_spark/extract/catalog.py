@@ -309,35 +309,31 @@ def x09_lineage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analogue: the finish-latch / resume contract
     (`/root/reference/src/event/hc/hc-event.c:223-259`) — a satisfied
     latch never refires."""
-    import os
     import shutil
     import tempfile
 
     from ocr_spark.operators.lineage import read_metrics, run_extraction
-
-    # app-id in the key: concurrent gate sessions must not rmtree each
-    # other's in-progress run directory (ADVICE r04)
-    key = hashlib.md5(
-        f"{sf_dir}|{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"ocr_spark_x09_{key}")
-    if os.path.isdir(out):
-        shutil.rmtree(out)  # fresh run every gate invocation
-    pages = _fixture_pages(spark).select("url", "html", "text")
-    run_extraction(spark, pages, out, run_id="gate", max_buckets=3)
-    run_extraction(spark, pages, out, run_id="gate")
-    third = run_extraction(spark, pages, out, run_id="gate")
-    noop = third["buckets_processed"] == 0
     from ocr_spark.operators.partitioning import DEFAULT_SALT
 
-    m = read_metrics(spark, out)
-    return (
-        m.filter(F.col("run_id") == "gate")
-        .groupBy(
-            (F.col("partition_id") / DEFAULT_SALT).cast("int").alias("size_class")
+    pages = _fixture_pages(spark).select("url", "html", "text")
+    # a fresh directory per call, removed once the report is materialized
+    out = tempfile.mkdtemp(prefix="ocr_spark_x09_")
+    try:
+        run_extraction(spark, pages, out, run_id="gate", max_buckets=3)
+        run_extraction(spark, pages, out, run_id="gate")
+        third = run_extraction(spark, pages, out, run_id="gate")
+        noop = third["buckets_processed"] == 0
+        m = read_metrics(spark, out)
+        return (
+            m.filter(F.col("run_id") == "gate")
+            .groupBy(
+                (F.col("partition_id") / DEFAULT_SALT).cast("int").alias("size_class")
+            )
+            .agg(F.sum("input_count").cast("int").alias("n_docs"))
+            .select(
+                "size_class", "n_docs", F.lit(bool(noop)).alias("resume_noop")
+            )
+            .localCheckpoint()
         )
-        .agg(F.sum("input_count").cast("int").alias("n_docs"))
-        .select(
-            "size_class", "n_docs", F.lit(bool(noop)).alias("resume_noop")
-        )
-    )
+    finally:
+        shutil.rmtree(out, ignore_errors=True)

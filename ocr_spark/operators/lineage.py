@@ -8,18 +8,9 @@ The Spark re-expression of three reference mechanisms (SURVEY.md §1.3):
   - finish-latch countdown (`src/event/hc/hc-event.c:223-259`)
     -> run complete ⇔ metrics rows == bucket count.
 
-Commit protocol (order matters — write data, then the marker, mirroring
-the satisfy-then-seal CAS order in `hc-event.c:155-172`):
-  1. committed = markers for run_id             (metrics table)
-  2. todo      = input buckets ∖ committed      (left_anti — the restart)
-  3. extract todo -> dynamic partition overwrite of data/bucket=N
-     (re-running an uncommitted bucket overwrites its partial output:
-     idempotent at any kill point)
-  4. read BACK the written data -> metrics rows -> append markers
-     (markers attest bytes on disk, not bytes in memory)
-
-A killed run therefore resumes recomputing exactly the uncommitted
-buckets (FIXTURES.md §3 restart test).
+The commit protocol itself lives in ``operators.commit``; an extraction
+run is that protocol with one size bucket per unit and the Arrow
+extraction as the per-unit transform.
 """
 
 from __future__ import annotations
@@ -30,32 +21,33 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark.extract.pipeline import _extract_batches, EXTRACT_DDL
+from ocr_spark.operators.commit import commit_run, read_markers
 from ocr_spark.operators.partitioning import size_bucket_repartition
 
-
-def _metrics_path(out_dir: str) -> str:
-    return os.path.join(out_dir, "metrics")
-
-
-def _data_path(out_dir: str) -> str:
-    return os.path.join(out_dir, "extracted")
+# the marker table (FIXTURES.md §3), partitioned by run_id on disk
+METRICS_DDL = (
+    "run_id string, partition_id int, input_count long, checksum long, "
+    "wall_time_ms long, committed_at timestamp"
+)
 
 
 def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = _metrics_path(out_dir)
-    try:
-        return spark.read.parquet(path)
-    except Exception:  # first run: no metrics yet
-        return None
+    return read_markers(spark, os.path.join(out_dir, "metrics"), METRICS_DDL)
 
 
 def assert_unique_urls(pages: DataFrame) -> None:
     """Input contract (FIXTURES §4): duplicate urls must fail fast."""
-    dup = (
-        pages.groupBy("url").count().filter(F.col("count") > 1).limit(1).collect()
+    dup = pages.groupBy("url").count().filter(F.col("count") > 1).first()
+    if dup is not None:
+        raise ValueError(f"duplicate url in input: {dup['url']!r}")
+
+
+def _bucket_metrics(written: DataFrame) -> DataFrame:
+    return written.groupBy(F.col("bucket").alias("partition_id")).agg(
+        F.count(F.lit(1)).alias("input_count"),
+        F.expr("bit_xor(xxhash64(url, extracted_text))").alias("checksum"),
+        (F.sum("proc_us") / F.lit(1000)).alias("wall_time_ms"),
     )
-    if dup:
-        raise ValueError(f"duplicate url in input: {dup[0]['url']!r}")
 
 
 def run_extraction(
@@ -64,14 +56,12 @@ def run_extraction(
     out_dir: str,
     run_id: str,
     max_buckets: int | None = None,
-    validate: bool = False,
     n_salt: int | None = None,
 ) -> dict:
     """Execute (or resume) one extraction run. ``max_buckets`` processes
     only the first K uncommitted buckets — the test hook that simulates a
     kill between partition commits."""
-    if validate:
-        assert_unique_urls(pages)
+    assert_unique_urls(pages)
 
     # bucket count = restart granularity AND max parallelism of the run;
     # pass n_salt ~ executor-cores x 4 on a cluster (default 8 keeps small
@@ -79,75 +69,20 @@ def run_extraction(
     bucketed = size_bucket_repartition(
         pages.select("url", "html", "text"), n_salt=n_salt
     )
-
-    committed = None
-    metrics = read_metrics(spark, out_dir)
-    if metrics is not None:
-        committed = (
-            metrics.filter(F.col("run_id") == run_id)
-            .select(F.col("partition_id").alias("bucket"))
-            .distinct()
-        )
-        todo = bucketed.join(F.broadcast(committed), "bucket", "left_anti")
-    else:
-        todo = bucketed
-
-    if max_buckets is not None:
-        keep = [
-            r["bucket"]
-            for r in todo.select("bucket").distinct().orderBy("bucket").limit(max_buckets).collect()
-        ]
-        todo = todo.filter(F.col("bucket").isin(keep))
-
-    todo_buckets = [r["bucket"] for r in todo.select("bucket").distinct().collect()]
-    if not todo_buckets:
-        return {"run_id": run_id, "buckets_processed": 0, "rows": 0}
-
-    extracted = todo.mapInPandas(_extract_batches, schema=EXTRACT_DDL)
-
-    # 1) data first — dynamic overwrite touches only the todo buckets
-    (
-        extracted.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(_data_path(out_dir))
+    n_buckets, rows = commit_run(
+        spark,
+        bucketed,
+        key="bucket",
+        data_dir=os.path.join(out_dir, "extracted"),
+        marker_dir=os.path.join(out_dir, "metrics"),
+        marker_ddl=METRICS_DDL,
+        marker_key="partition_id",
+        aggregate=_bucket_metrics,
+        run_id=run_id,
+        transform=lambda todo: todo.mapInPandas(_extract_batches, schema=EXTRACT_DDL),
+        max_units=max_buckets,
     )
-
-    # 2) markers second, derived from what is actually on disk
-    written = spark.read.parquet(_data_path(out_dir)).filter(
-        F.col("bucket").isin(todo_buckets)
-    )
-    new_metrics = (
-        written.groupBy(F.col("bucket").cast("int").alias("partition_id"))
-        .agg(
-            F.count(F.lit(1)).alias("input_count"),
-            F.expr("bit_xor(xxhash64(url, extracted_text))").alias("checksum"),
-            (F.sum("proc_us") / F.lit(1000)).cast("long").alias("wall_time_ms"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            "partition_id",
-            "input_count",
-            "checksum",
-            "wall_time_ms",
-            F.current_timestamp().alias("committed_at"),
-        )
-    )
-    # IDEM guard: never double-write a marker for the same (run, bucket)
-    existing = read_metrics(spark, out_dir)
-    if existing is not None:
-        new_metrics = new_metrics.join(
-            existing.filter(F.col("run_id") == run_id).select("partition_id"),
-            "partition_id",
-            "left_anti",
-        )
-    n_rows = written.count()
-    new_metrics.write.mode("append").parquet(_metrics_path(out_dir))
-    return {
-        "run_id": run_id,
-        "buckets_processed": len(todo_buckets),
-        "rows": n_rows,
-    }
+    return {"run_id": run_id, "buckets_processed": n_buckets, "rows": rows}
 
 
 def run_complete(spark: SparkSession, out_dir: str, run_id: str, n_buckets: int) -> bool:
@@ -233,4 +168,4 @@ def run_rollup_complete(
 ) -> bool:
     """Run-level finish = every size-class latch closed (one plan)."""
     latches = size_class_latches(spark, out_dir, run_id, bucketed, n_salt)
-    return latches.agg(F.min(F.col("complete").cast("int"))).collect()[0][0] == 1
+    return latches.agg(F.min(F.col("complete").cast("int"))).first()[0] == 1

@@ -6,9 +6,7 @@ A training job consumes the corpus as numbered shard files of a fixed
 token budget, so the writer must be (a) deterministic — shard ids and
 contents are a pure function of the packed corpus, never of execution
 order — and (b) resumable — a killed run re-writes only uncommitted
-shards (the x09 write-data-then-marker protocol at shard grain,
-reference analogue: the IDEM satisfy-then-seal CAS order in
-`/root/reference/src/event/hc/hc-event.c:155-172`).
+shards (the ``operators.commit`` protocol, one shard per unit).
 
 Shard rule: within each pack_group, packed bins (p02/p03 output) are
 taken in bin_idx order and a shard boundary falls every SHARD_TOKENS
@@ -19,13 +17,9 @@ DuckDB oracle replays it exactly). Cross-engine arithmetic is integer
 token counts and one double floor-division (exact to 2^53).
 
 Scale shape: the bin rollup and the cumsum shuffle once on pack_group
-(the packer already partitioned by it); the shard list collected to the
-driver is control-plane metadata (corpus_tokens / SHARD_TOKENS rows —
-~25M entries at 100 TB, the same order as a file manifest, and a real
-deployment pages it per pack_group); the data write is one
-dynamic-partition-overwrite parquet job partitioned by shard, and
-markers are derived from read-back on-disk data, never from in-memory
-state.
+(the packer already partitioned by it); the shard keys never leave the
+cluster (the todo set is a broadcast DataFrame, ~25M rows at 100 TB,
+the same order as a file manifest).
 """
 
 from __future__ import annotations
@@ -36,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ocr_spark.operators.commit import commit_run, read_markers
 from ocr_spark.plans import register
 
 SHARD_TOKENS = 4096  # shard budget in true-BPE tokens (64 full PACK_CAP bins)
@@ -48,13 +43,11 @@ SHARD_TOKENS = 4096  # shard budget in true-BPE tokens (64 full PACK_CAP bins)
 # where many boundaries = better coverage.
 GATE_SHARD_TOKENS = 4 * SHARD_TOKENS
 
-
-def _data_path(out_dir: str) -> str:
-    return os.path.join(out_dir, "shards")
-
-
-def _manifest_path(out_dir: str) -> str:
-    return os.path.join(out_dir, "manifest")
+# the marker table, partitioned by run_id on disk
+MANIFEST_DDL = (
+    "run_id string, shard_id string, pack_group int, shard_idx int, n_bins int, "
+    "n_chunks int, n_tokens long, checksum long, committed_at timestamp"
+)
 
 
 def shard_assign(packed: DataFrame, shard_tokens: int = SHARD_TOKENS) -> DataFrame:
@@ -79,10 +72,16 @@ def shard_assign(packed: DataFrame, shard_tokens: int = SHARD_TOKENS) -> DataFra
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(_manifest_path(out_dir))
-    except Exception:  # first run: no manifest yet
-        return None
+    return read_markers(spark, os.path.join(out_dir, "manifest"), MANIFEST_DDL)
+
+
+def _shard_markers(written: DataFrame) -> DataFrame:
+    return written.groupBy("shard_id", "pack_group", "shard_idx").agg(
+        F.countDistinct("bin_idx").alias("n_bins"),
+        F.count(F.lit(1)).alias("n_chunks"),
+        F.sum("n_chunk_tokens").alias("n_tokens"),
+        F.expr("bit_xor(xxhash64(doc_id, chunk_idx, n_chunk_tokens))").alias("checksum"),
+    )
 
 
 def write_shards(
@@ -95,97 +94,26 @@ def write_shards(
 ) -> dict:
     """Execute (or resume) one shard-writing run. ``max_shards``
     processes only the first K uncommitted shards — the test hook that
-    simulates a kill between shard commits (x09's max_buckets twin).
-
-    Protocol per run: committed = manifest markers for run_id; todo =
-    assigned shards ∖ committed; write todo shard data (dynamic
-    partition overwrite, so re-running an uncommitted shard replaces
-    its partial file); read BACK the written data and append manifest
-    rows derived from disk."""
+    simulates a kill between shard commits (x09's max_buckets twin)."""
     assigned = shard_assign(packed, shard_tokens).withColumn(
         "shard_id",
         F.concat_ws("-", F.col("pack_group"), F.col("shard_idx")),
     )
-    # one barrier: the shard list, the filter, and the write must all see
-    # the SAME assignment without re-running the packer three times
-    assigned = assigned.localCheckpoint()
-
-    shards = [
-        r["shard_id"]
-        for r in assigned.select("shard_id")
-        .distinct()
-        .orderBy("shard_id")
-        .collect()
-    ]
-    manifest = read_manifest(spark, out_dir)
-    committed: set[str] = set()
-    if manifest is not None:
-        committed = {
-            r["shard_id"]
-            for r in manifest.filter(F.col("run_id") == run_id)
-            .select("shard_id")
-            .distinct()
-            .collect()
-        }
-    todo = [s for s in shards if s not in committed]
-    if max_shards is not None:
-        todo = todo[:max_shards]
-    if not todo:
-        return {"run_id": run_id, "shards_processed": 0}
-
-    # The todo set is data-sized (19.5k shards in the 192k-doc E2E,
-    # millions at 100 TB), so it travels as a broadcast DataFrame and a
-    # semi-join — never as an O(|todo|) literal IN expression built on
-    # the driver.
-    todo_df = F.broadcast(
-        spark.createDataFrame([(s,) for s in todo], "shard_id string")
+    # one barrier: the todo keys and the write must both see the SAME
+    # assignment without re-running the packer twice
+    n_shards, _ = commit_run(
+        spark,
+        assigned.localCheckpoint(),
+        key="shard_id",
+        data_dir=os.path.join(out_dir, "shards"),
+        marker_dir=os.path.join(out_dir, "manifest"),
+        marker_ddl=MANIFEST_DDL,
+        marker_key="shard_id",
+        aggregate=_shard_markers,
+        run_id=run_id,
+        max_units=max_shards,
     )
-
-    # 1) data first — dynamic overwrite touches only the todo shards
-    (
-        assigned.join(todo_df, "shard_id", "left_semi")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("shard_id")
-        .parquet(_data_path(out_dir))
-    )
-
-    # 2) markers second, derived from what is actually on disk
-    written = spark.read.parquet(_data_path(out_dir)).join(
-        todo_df, "shard_id", "left_semi"
-    )
-    new_rows = (
-        written.groupBy("shard_id", "pack_group", "shard_idx")
-        .agg(
-            F.countDistinct("bin_idx").cast("int").alias("n_bins"),
-            F.count(F.lit(1)).cast("int").alias("n_chunks"),
-            F.sum("n_chunk_tokens").cast("long").alias("n_tokens"),
-            F.expr("bit_xor(xxhash64(doc_id, chunk_idx, n_chunk_tokens))").alias(
-                "checksum"
-            ),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            "shard_id",
-            F.col("pack_group").cast("int").alias("pack_group"),
-            F.col("shard_idx").cast("int").alias("shard_idx"),
-            "n_bins",
-            "n_chunks",
-            "n_tokens",
-            "checksum",
-            F.current_timestamp().alias("committed_at"),
-        )
-    )
-    # IDEM guard: never double-write a marker for the same (run, shard)
-    existing = read_manifest(spark, out_dir)
-    if existing is not None:
-        new_rows = new_rows.join(
-            existing.filter(F.col("run_id") == run_id).select("shard_id"),
-            "shard_id",
-            "left_anti",
-        )
-    new_rows.write.mode("append").parquet(_manifest_path(out_dir))
-    return {"run_id": run_id, "shards_processed": len(todo)}
+    return {"run_id": run_id, "shards_processed": n_shards}
 
 
 def _p06_oracle_sql() -> str:
@@ -226,7 +154,6 @@ def p06_shard_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure-SQL shard rollup exactly: every packed chunk lands in exactly
     one shard across the two writing runs, token counts exact, none
     recomputed by the third run."""
-    import hashlib
     import shutil
     import tempfile
 
@@ -237,13 +164,6 @@ def p06_shard_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
         pack_chunks,
     )
     from ocr_spark.sources.io import load_table
-
-    key = hashlib.md5(
-        f"{sf_dir}|{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"ocr_spark_p06_{key}")
-    if os.path.isdir(out):
-        shutil.rmtree(out)  # fresh run every gate invocation
 
     docs = load_table(spark, sf_dir, "documents")
     toks = bpe_token_arrays_production(docs).localCheckpoint()
@@ -257,21 +177,25 @@ def p06_shard_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
         chunks.select("doc_id", "chunk_idx", "n_chunk_tokens")
     ).localCheckpoint()
 
-    write_shards(
-        spark, packed, out, run_id="gate", shard_tokens=GATE_SHARD_TOKENS, max_shards=3
-    )
-    write_shards(spark, packed, out, run_id="gate", shard_tokens=GATE_SHARD_TOKENS)
-    third = write_shards(
-        spark, packed, out, run_id="gate", shard_tokens=GATE_SHARD_TOKENS
-    )
-    noop = third["shards_processed"] == 0
-
-    m = read_manifest(spark, out)
-    return m.filter(F.col("run_id") == "gate").select(
-        "pack_group",
-        "shard_idx",
-        "n_bins",
-        "n_chunks",
-        "n_tokens",
-        F.lit(bool(noop)).alias("resume_noop"),
-    )
+    # a fresh directory per call, removed once the report is materialized
+    out = tempfile.mkdtemp(prefix="ocr_spark_p06_")
+    try:
+        write_shards(
+            spark, packed, out, run_id="gate", shard_tokens=GATE_SHARD_TOKENS, max_shards=3
+        )
+        write_shards(spark, packed, out, run_id="gate", shard_tokens=GATE_SHARD_TOKENS)
+        third = write_shards(
+            spark, packed, out, run_id="gate", shard_tokens=GATE_SHARD_TOKENS
+        )
+        noop = third["shards_processed"] == 0
+        m = read_manifest(spark, out)
+        return m.filter(F.col("run_id") == "gate").select(
+            "pack_group",
+            "shard_idx",
+            "n_bins",
+            "n_chunks",
+            "n_tokens",
+            F.lit(bool(noop)).alias("resume_noop"),
+        ).localCheckpoint()
+    finally:
+        shutil.rmtree(out, ignore_errors=True)

@@ -145,45 +145,6 @@ def _stage_single_events_file(spark: SparkSession, sf_dir: str) -> str:
     return staging
 
 
-def _duckdb_version() -> str:
-    try:
-        import duckdb
-
-        return duckdb.__version__
-    except Exception:  # noqa: BLE001 — diagnostics only
-        return "unavailable"
-
-
-def _dump_stream_debug(spark: SparkSession, query, staging: str) -> None:
-    """Sidecar JSON (session confs + per-batch progress) so a future
-    driver-side red row is diagnosable — VERDICT r03 'What's wrong' #1."""
-    import json
-    import os
-
-    debug = {
-        "confs": {
-            k: spark.conf.get(k, None)
-            for k in (
-                "spark.sql.shuffle.partitions",
-                "spark.sql.execution.arrow.maxRecordsPerBatch",
-                "spark.sql.streaming.stateStore.providerClass",
-                "spark.sql.session.timeZone",
-                "spark.master",
-            )
-        },
-        "versions": {"spark": spark.version, "duckdb": _duckdb_version()},
-        "batches": [],
-    }
-    for p in query.recentProgress:
-        if not isinstance(p, dict):  # Spark 4 returns progress objects
-            p = json.loads(p.json)
-        debug["batches"].append(
-            {"batchId": p.get("batchId"), "numInputRows": p.get("numInputRows")}
-        )
-    with open(os.path.join(staging, "_s04_debug.json"), "w") as fh:
-        json.dump(debug, fh, indent=1, sort_keys=True)
-
-
 @register(
     "s04_stream_milestones",
     oracle=f"""
@@ -228,12 +189,6 @@ def s04_stream_milestones(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    try:
-        _dump_stream_debug(spark, q, staging)
-    except Exception as exc:  # noqa: BLE001 — diagnostics must never fail the gate
-        import sys
-
-        print(f"s04 debug sidecar failed: {exc!r}", file=sys.stderr)
     return spark.table("s04_out")
 
 
