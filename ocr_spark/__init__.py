@@ -9,7 +9,7 @@ buffers, and finish-latches provide hierarchical termination detection
 
 - the dependence DAG      -> the Catalyst logical plan (DataFrame API)
 - datablocks (byte DBs)   -> BinaryType columns moved as Arrow batches
-- EDTs (task functions)   -> vectorized pandas UDFs / mapInPandas stages
+- EDTs (task functions)   -> Arrow-batched mapInArrow / mapInPandas stages, pandas UDFs
 - finish-latch semantics  -> per-partition commit markers + job completion
 - work-stealing locality  -> salted, size-bucketed repartitioning + AQE
 

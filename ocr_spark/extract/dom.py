@@ -2,7 +2,7 @@
 (stdlib ``html.parser`` — no lxml in this environment).
 
 One page in, an ordered list of Block records out: the "flattened DOM
-block array" of the north rule. Runs inside a mapInPandas batch loop —
+block array" of the north rule. Runs inside a mapInArrow batch loop —
 per-document Python is fine there because the crossing is Arrow-batched;
 what is banned is per-ROW Python UDF dispatch.
 

@@ -4,7 +4,7 @@ Plan shape (one wide exchange total, per SURVEY.md §4.3):
 
   scan pages (column-pruned: url, html, text, lang [, bucket])
     -> salted size-bucket repartition           (the one shuffle)
-    -> mapInPandas EXTRACT                      (Arrow-batched Python)
+    -> mapInArrow EXTRACT                       (Arrow-batched Python)
     -> sink / golden-diff
 
 The EXTRACT stage is the EDT of the system (reference task execute:
@@ -23,15 +23,17 @@ failure) — FIXTURES §4.
 
 from __future__ import annotations
 
+import functools
 import time
 from collections.abc import Iterator
 
-import pandas as pd
-
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 from ocr_spark.extract import boilerplate, dom, normalize, pdfbranch
-from ocr_spark.operators.partitioning import size_bucket_repartition, with_size_buckets
+from ocr_spark.operators.partitioning import size_bucket_repartition
 
 EXTRACT_DDL = (
     "url string, extracted_text binary, n_blocks_kept int, "
@@ -56,59 +58,71 @@ def extract_one(html, text) -> tuple[bytes, int, str]:
     return normalize.assemble(kept), len(kept), "html"
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        n = len(pdf)
-        out = {
-            "url": pdf["url"].tolist(),
-            "extracted_text": [None] * n,
-            "n_blocks_kept": [0] * n,
-            "branch": ["empty"] * n,
-            "error": [None] * n,
-            "bucket": (pdf["bucket"] if "bucket" in pdf else pd.Series([-1] * n)).tolist(),
-            "proc_us": [0] * n,
-        }
-        htmls = pdf["html"].tolist()
-        texts = pdf["text"].tolist()
+def _extract_batches(
+    batches: Iterator[pa.RecordBatch], schema: pa.Schema
+) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        n = batch.num_rows
+        extracted: list[bytes | None] = [None] * n
+        n_kept = [0] * n
+        branches = ["empty"] * n
+        errors: list[str | None] = [None] * n
+        proc_us = [0] * n
+        htmls = batch.column("html").to_pylist()
+        texts = batch.column("text").to_pylist()
         for j in range(n):
             t0 = time.perf_counter_ns()
             try:
-                data, n_kept, branch = extract_one(htmls[j], texts[j])
-                out["extracted_text"][j] = data
-                out["n_blocks_kept"][j] = n_kept
-                out["branch"][j] = branch
+                extracted[j], n_kept[j], branches[j] = extract_one(htmls[j], texts[j])
             except Exception as e:  # noqa: BLE001 — row error, never task failure
-                out["branch"][j] = "error"
-                out["error"][j] = f"{type(e).__name__}: {e}"[:500]
-            out["proc_us"][j] = (time.perf_counter_ns() - t0) // 1000
-        yield pd.DataFrame(out)
+                branches[j] = "error"
+                errors[j] = f"{type(e).__name__}: {e}"[:500]
+            proc_us[j] = (time.perf_counter_ns() - t0) // 1000
+        yield pa.RecordBatch.from_pydict(
+            {
+                "url": batch.column("url"),
+                "extracted_text": extracted,
+                "n_blocks_kept": n_kept,
+                "branch": branches,
+                "error": errors,
+                "bucket": batch.column("bucket"),
+                "proc_us": proc_us,
+            },
+            schema=schema,
+        )
 
 
-def extract_pages(
-    pages: DataFrame,
-    repartition: bool = True,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def extract_stage(bucketed: DataFrame) -> DataFrame:
+    """The EXTRACT stage: (url, html, text, bucket) rows -> EXTRACT_DDL rows.
+
+    The one Python crossing of every extraction path (batch, restartable
+    run, stream): Arrow batches in and out, no pandas round trip."""
+    schema = to_arrow_schema(DataType.fromDDL(EXTRACT_DDL))
+    return bucketed.mapInArrow(
+        functools.partial(_extract_batches, schema=schema), schema=EXTRACT_DDL
+    )
+
+
+def extract_pages(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """pages (url, html, text[, lang]) -> extracted rows.
 
     Column pruning is explicit: only url/html/text (+bucket) cross into
     Python — warc_ts/lang never pay the Arrow transfer.
     """
-    cols = pages.select("url", "html", "text")
-    if repartition:
-        if num_partitions is None:
-            # Pin the exchange width: an unspecified repartition("bucket")
-            # is AQE-coalescible, and AQE sizes partitions by BYTES —
-            # right for shuffles, wrong for a CPU-bound Python stage
-            # where 50 MB of html is minutes of parse work (observed:
-            # 16k-doc bench coalesced to 8 tasks on 32 cores, a 4x
-            # throughput loss with a straggler tail). Several tasks per
-            # core keeps every worker busy and bounds the tail; cluster
-            # jobs pass an explicit count (extract_job.py does).
-            num_partitions = pages.sparkSession.sparkContext.defaultParallelism * 3
-        bucketed = size_bucket_repartition(
-            cols, num_partitions=num_partitions
-        )
-    else:
-        bucketed = with_size_buckets(cols)
-    return bucketed.mapInPandas(_extract_batches, schema=EXTRACT_DDL)
+    if num_partitions is None:
+        # One task per core. Every Python task pays a fixed setup cost
+        # before its first document: pyspark calls
+        # importlib.invalidate_caches() per task, which re-reads the zip
+        # directory of each archive on the worker's sys.path. Measured on
+        # a 4-vCPU VM at local[4]: 0.2-0.34 s per task; a no-work
+        # mapInArrow pass over 12 partitions took 0.8-1.4 s against
+        # 0.2-0.25 s for its JVM-only twin. size_bucket_repartition
+        # balances rows, so one wave of tasks has no skewed tail to hide.
+        # The width is pinned because a width-free repartition is
+        # AQE-coalescible by bytes, which under-splits this CPU-bound
+        # stage.
+        num_partitions = pages.sparkSession.sparkContext.defaultParallelism
+    bucketed = size_bucket_repartition(
+        pages.select("url", "html", "text"), num_partitions=num_partitions
+    )
+    return extract_stage(bucketed)

@@ -20,7 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_spark.extract.pipeline import _extract_batches, EXTRACT_DDL
+from ocr_spark.extract.pipeline import extract_stage
 from ocr_spark.operators.commit import commit_run, read_markers
 from ocr_spark.operators.partitioning import size_bucket_repartition
 
@@ -79,7 +79,7 @@ def run_extraction(
         marker_key="partition_id",
         aggregate=_bucket_metrics,
         run_id=run_id,
-        transform=lambda todo: todo.mapInPandas(_extract_batches, schema=EXTRACT_DDL),
+        transform=extract_stage,
         max_units=max_buckets,
     )
     return {"run_id": run_id, "buckets_processed": n_buckets, "rows": rows}

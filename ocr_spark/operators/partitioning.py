@@ -6,8 +6,10 @@ Why: one 10 MB page in a batch of 4 KB pages serializes a worker (the
 reference's fixed 128-slot deque overflow is the same failure mode,
 `/root/reference/src/workpile/hc/deque.c:35-37`). Hash-salting alone
 balances row COUNTS; extraction cost scales with BYTES, so rows are
-bucketed by log2(byte-length) x salt: each shuffle partition then holds
-documents of comparable unit cost, and AQE can coalesce the small ones.
+bucketed by log2(byte-length) x salt. An explicit-width exchange hashes
+(bucket, url), one key per document, so partitions get even row counts
+and each bucket's documents spread across all of them; a width-free
+repartition hashes the bucket alone, so a bucket is one restart unit.
 
 At cluster scale the same bucket column doubles as the lineage /
 commit-marker partition key (operators.lineage), so restart granularity
@@ -58,18 +60,25 @@ def size_bucket_repartition(
     n_salt: int | None = None,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Salt count must scale with target parallelism: documents cluster
+    """Add the size-bucket column and shuffle on it.
+
+    With ``num_partitions`` the exchange hashes (bucket, url), which is
+    unique per document, so every partition gets an even share of rows.
+    Hashing the bucket alone put a few dozen bucket values into too few
+    slots: 12 partitions of a 4,000-page corpus left one empty and two
+    holding 2,510 of the rows. Without ``num_partitions`` the exchange
+    hashes the bucket alone, so each bucket lands whole in one partition
+    — the restart unit of ``operators.lineage``.
+
+    n_salt defaults to num_partitions (at least 8): documents cluster
     into a handful of occupied size classes, so distinct bucket values ≈
-    (occupied classes) × n_salt. With n_salt fixed at 8 a 128-partition
-    repartition hashes ~27 distinct buckets into ~27 non-empty
-    partitions — parallelism silently capped (measured on the 48k-doc
-    corpus). Defaulting n_salt to num_partitions keeps distinct buckets
-    ≥ several × partitions at any cluster size."""
+    (occupied classes) × n_salt, and a bucket-only exchange can use at
+    most that many partitions."""
     if n_salt is None:
         n_salt = max(DEFAULT_SALT, num_partitions or 0)
     out = with_size_buckets(df, url_col, payload_col, n_salt)
     if num_partitions:
-        return out.repartition(num_partitions, "bucket")
+        return out.repartition(num_partitions, "bucket", url_col)
     return out.repartition("bucket")
 
 

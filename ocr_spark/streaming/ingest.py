@@ -273,8 +273,8 @@ def value_milestones_batch(spark: SparkSession, sf_dir: str):
 
 def streaming_extract(spark: SparkSession, pages_dir: str, name: str = "extract_out"):
     """Structured Streaming twin of the batch extraction pipeline: the
-    identical mapInPandas EXTRACT stage over a file-source stream of page
-    parquet. On a cluster this is the continuous-ingest shape (new WARC
+    identical EXTRACT stage (``extract_stage``) over a file-source stream
+    of page parquet. On a cluster this is the continuous-ingest shape (new WARC
     drops land in the table path and are extracted incrementally); the
     batch job stays the backfill/restart path.
 
@@ -282,7 +282,7 @@ def streaming_extract(spark: SparkSession, pages_dir: str, name: str = "extract_
     needs no event-time state — exactly the IDEM/once semantics of the
     batch commit markers, provided per-batch by the sink's epoch id.
     """
-    from ocr_spark.extract.pipeline import EXTRACT_DDL, _extract_batches
+    from ocr_spark.extract.pipeline import extract_stage
     from ocr_spark.operators.partitioning import with_size_buckets
 
     pages = (
@@ -291,7 +291,7 @@ def streaming_extract(spark: SparkSession, pages_dir: str, name: str = "extract_
         .parquet(pages_dir)
     )
     bucketed = with_size_buckets(pages.select("url", "html", "text"))
-    extracted = bucketed.mapInPandas(_extract_batches, schema=EXTRACT_DDL)
+    extracted = extract_stage(bucketed)
     out = extracted.select(
         "url", "branch", "n_blocks_kept", F.octet_length("extracted_text").alias("n_bytes")
     )

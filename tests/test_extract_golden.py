@@ -87,7 +87,7 @@ def test_plan_is_arrow_vectorized(spark):
     input_hint): the physical plan must not contain BatchEvalPython."""
     plan = extract_pages(pages_df(spark, 10))._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
 
 
 def test_duplicate_urls_fail_fast(spark):
